@@ -25,4 +25,4 @@ Layout:
     oracle/      pure-Python reference-semantics oracle for P/R tests
 """
 
-__version__ = "0.1.0"
+__version__ = "0.2.0"

@@ -23,9 +23,31 @@ on with plain parquet:
   `counters()` is the per-partition metrics table (A6 analog,
   scripts/pubmed_bulk.py:59-87).
 
-Resume semantics: ``write_stage`` computes only the NOT-yet-committed
-partitions (partition-pruned anti-filter on batch_id, which Catalyst
-pushes into the source scan) — re-running a finished stage is a no-op.
+Resume semantics — two checks, cheapest first:
+
+* LINEAGE SKIP: a commit may carry an input signature (``write_stage(...,
+  lineage=sig)``), stored in the same atomic manifest swap as the
+  snapshot. The caller derives it from everything the stage's output is
+  a deterministic function of — the manifest counters of the committed
+  stages it reads (or ``content_fold`` of a raw input), its parameters
+  and a digest of the code it runs. ``is_current(stage, sig)`` is a
+  manifest read: when it holds, the caller skips the stage without
+  building or executing its frame. It detects any change of an input's
+  committed content, of a parameter or of the code; it cannot see a
+  change it was not told about (an input left out of the signature).
+* ``verify_counts`` FALLBACK: without a matching signature (an input,
+  parameter or code change; a manifest written before signatures
+  existed; a compacted stage) ``write_stage`` recomputes the incoming
+  frame's per-partition counters and re-commits exactly the partitions
+  whose row count or content folds differ, retracting vanished ones.
+  It detects any change in the stage's OUTPUT, including an in-place
+  row change with an unchanged count, at the price of recomputing the
+  stage.
+
+A recorded signature always describes the data on disk: any commit
+without one clears it, a commit that changes data drops it before the
+data moves (a crash in between leaves no signature, so the next run
+verifies), and ``compact_stage`` rewrites the manifest without it.
 """
 
 from __future__ import annotations
@@ -61,6 +83,15 @@ def _content_counters(df: DataFrame, partition_col: str) -> dict[int, dict]:
         )
         .collect()
     }
+
+
+def content_fold(df: DataFrame) -> dict:
+    """The same integrity fold over a whole frame (one aggregate, no
+    partition column): the cheap stand-in for a raw input's content in
+    a lineage signature."""
+    return _content_counters(df.withColumn("_fold", F.lit(0)), "_fold").get(
+        0, {"rows": 0}
+    )
 
 
 class CheckpointCatalog:
@@ -138,7 +169,57 @@ class CheckpointCatalog:
                 },
             }
         )
+        man.pop("lineage", None)  # the data changed; the caller re-signs
         self._store_manifest(stage, man)
+
+    def _drop_lineage(self, stage: str) -> None:
+        """Clear a stage's signature before its data changes, so a crash
+        mid-write leaves a stage that re-verifies, not one that skips."""
+        man = self._load_manifest(stage)
+        if man.pop("lineage", None) is not None:
+            self._store_manifest(stage, man)
+
+    def _commit_manifest(
+        self, stage: str, schema, lineage: str | None, counters: dict | None = None
+    ) -> dict:
+        """The commit point: one atomic swap of the new snapshot (if
+        any), the frame schema and the lineage signature. A swap that
+        would change nothing is not written."""
+        man = self._load_manifest(stage)
+        snap: dict = {}
+        if counters:
+            snap = {
+                "snapshot_id": len(man["snapshots"]),
+                "ts": time.time(),
+                "counters": {str(k): v for k, v in counters.items()},
+            }
+            man["snapshots"].append(snap)
+        elif man.get("lineage") == lineage:
+            return snap
+        # recorded so read_stage can serve a typed EMPTY frame after a
+        # full retraction (no data files left to infer a schema from)
+        man["schema"] = schema.json()
+        if lineage is None:
+            man.pop("lineage", None)
+        else:
+            man["lineage"] = lineage
+        self._store_manifest(stage, man)
+        return snap
+
+    def is_current(self, stage: str, lineage: str) -> bool:
+        """True iff the stage's last commit recorded this input
+        signature — a manifest read, no Spark job."""
+        return self._load_manifest(stage).get("lineage") == lineage
+
+    def state(self, stage: str) -> list:
+        """The stage's committed content as its manifest records it:
+        sorted ``[batch, rows, content_hash, content_sum]`` of the live
+        batches. A downstream stage folds this into its signature."""
+        return sorted(
+            [b, c["rows"], c.get("content_hash"), c.get("content_sum")]
+            for b, c in self.counters(stage).items()
+            if not c.get("retracted")
+        )
 
     def write_stage(
         self,
@@ -147,9 +228,17 @@ class CheckpointCatalog:
         partition_col: str = "batch_id",
         resume_mode: str = "verify_counts",
         allow_empty: bool = False,
+        lineage: str | None = None,
     ) -> dict:
         """Commit all pending partitions of ``df``; returns the snapshot
         entry ({} if everything was already committed).
+
+        ``lineage``: the input signature the caller derived for ``df``
+        (module docstring, "Resume semantics"). It is stored in the
+        commit's manifest swap, so the NEXT run can ask ``is_current``
+        and skip the stage without building ``df``. A call without one
+        clears any stored signature. This method itself never skips on
+        a signature: when it runs, it runs the resume mode below.
 
         ``allow_empty``: by default a fully-empty incoming frame is
         treated as a caller bug and ignored (the stage keeps serving
@@ -164,14 +253,16 @@ class CheckpointCatalog:
         complete" when the INPUT can grow (batch_id is a hash of the
         key, so new rows land in already-committed batches):
 
-        * ``verify_counts`` (default): one counting pass over the
-          incoming frame computing row count AND the order-insensitive
-          content hash; a batch is pending iff either differs from the
-          committed counters (changed batches are re-committed via
-          dynamic partition overwrite) — an in-place row change with an
-          unchanged count (e.g. latest-crawl-wins replacing a page's
-          text) is therefore re-committed, not silently kept stale.
-          Re-running an unchanged stage is still a no-op.
+        * ``verify_counts`` (default, the lineage fallback): one
+          counting pass over the incoming frame computing row count AND
+          the order-insensitive content folds; a batch is pending iff
+          any differs from the committed counters (changed batches are
+          re-committed via dynamic partition overwrite) — an in-place
+          row change with an unchanged count (e.g. latest-crawl-wins
+          replacing a page's text) is therefore re-committed, not
+          silently kept stale. Committed batches absent from the frame
+          are retracted. Re-running an unchanged stage writes no data,
+          but it recomputes the whole stage to find that out.
         * ``skip_committed``: the cheap immutable-input path — skip any
           batch ever committed without looking at the data (exactly the
           reference's skip-existing-file semantics).
@@ -232,6 +323,7 @@ class CheckpointCatalog:
             ):
                 return {"stale_empty_input": True}
             if not changed:
+                self._commit_manifest(stage, df.schema, lineage)
                 return {"retracted": vanished} if vanished else {}
             pending = df.filter(F.col(partition_col).isin(changed))
 
@@ -242,30 +334,16 @@ class CheckpointCatalog:
         # collision in two independent folds.
         pending = pending.persist()
         counters = _content_counters(pending, partition_col)
-        if not counters:
-            pending.unpersist()
-            return {}
-
-        (
-            pending.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(self._stage_dir(stage))
-        )
+        if counters:
+            self._drop_lineage(stage)
+            (
+                pending.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(partition_col)
+                .parquet(self._stage_dir(stage))
+            )
         pending.unpersist()
-
-        man = self._load_manifest(stage)
-        snap = {
-            "snapshot_id": len(man["snapshots"]),
-            "ts": time.time(),
-            "counters": {str(k): v for k, v in counters.items()},
-        }
-        man["snapshots"].append(snap)
-        # recorded so read_stage can serve a typed EMPTY frame after a
-        # full retraction (no data files left to infer a schema from)
-        man["schema"] = pending.schema.json()
-        self._store_manifest(stage, man)
-        return snap
+        return self._commit_manifest(stage, pending.schema, lineage, counters)
 
     def read_stage(self, spark: SparkSession, stage: str) -> DataFrame:
         done = self.committed_batches(stage)
@@ -335,7 +413,9 @@ class CheckpointCatalog:
         swap leaves the old generation fully intact and served (the
         half-written new generation is an unreferenced orphan); after
         the swap, only the obsolete old generation remains to be
-        garbage-collected (best-effort rmtree at the end).
+        garbage-collected (best-effort rmtree at the end). The new
+        manifest carries no lineage signature: the batch keyspace
+        changed, so the next run of the stage's writer verifies.
         """
         import shutil
 

@@ -19,13 +19,17 @@ Run on a cluster:
 from __future__ import annotations
 
 import argparse
+import functools
+import hashlib
 import json
+import pkgutil
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .corpus import GAZETTEER, NEL_LOOKUP, pages_df
-from .io.catalog import CheckpointCatalog
+from .io.catalog import CheckpointCatalog, content_fold
 from .stages.analysis import entity_frequency, id_frequency
 from .stages.canonical import canonicalize_entities
 from .stages.extract import audit_hashes, extract_documents
@@ -34,6 +38,58 @@ from .stages.ner_dict import dict_ner
 from .stages.nel import link_entities
 from .stages.split import split_documents
 from .stages.triples import cooccurrence_triples
+
+STAGES = (
+    "documents", "screen", "dedup", "sentences", "mentions", "linked",
+    "canonical", "triples", "graph", "analysis",
+)
+# screen and dedup are opt-in (and sticky once committed, see below)
+DEFAULT_STAGES = frozenset(STAGES) - {"screen", "dedup"}
+
+# engine source each stage runs, beside textops.py (the shared text
+# core) and this module (which composes the stage frames); a lineage
+# signature covers their digest
+_STAGE_SOURCES = {
+    "documents": ("stages/extract.py",),
+    "screen": ("ops/curation.py",),
+    "dedup": ("stages/canonical.py",),
+    "sentences": ("stages/split.py",),
+    "mentions": ("stages/ner_dict.py", "stages/merge.py"),
+    "linked": ("stages/nel.py",),
+    "canonical": ("stages/canonical.py",),
+    "triples": ("stages/triples.py",),
+    "graph": ("ops/graph.py",),
+    "analysis": ("stages/analysis.py",),
+}
+
+
+def check_stages(stages) -> None:
+    unknown = set(stages) - set(STAGES)
+    if unknown:
+        raise ValueError(
+            f"unknown stage(s) {', '.join(sorted(unknown))}; "
+            f"valid stages: {', '.join(STAGES)}"
+        )
+
+
+@functools.lru_cache(maxsize=None)
+def _source_digest(modules: tuple[str, ...]) -> str:
+    """sha256 over the package source files a stage runs. Read through
+    the package loader, so it also works from a --py-files zip; when the
+    source is not readable the digest is unique to this process, so a
+    later process never skips on it."""
+    h = hashlib.sha256()
+    for rel in modules + ("textops.py", "pipeline.py"):
+        try:
+            h.update(pkgutil.get_data(__package__, rel))
+        except OSError:
+            return uuid.uuid4().hex
+    return h.hexdigest()
+
+
+def _signature(**parts) -> str:
+    # parts are built in a fixed order, so equal inputs give equal text
+    return hashlib.sha256(json.dumps(parts, default=repr).encode()).hexdigest()
 
 
 def run_pipeline(
@@ -51,44 +107,59 @@ def run_pipeline(
     triples_cap: int | None = None,
 ) -> dict:
     """Execute (and checkpoint) the full chain; returns the lineage
-    report {stage: {sec, rows, batches}}. ``stages`` filters which
-    stages run (the reference's `ignore` map, inverted).
+    report {stage: {sec, rows_committed, batches_committed, resume}}.
+    ``stages`` filters which stages run (the reference's `ignore` map,
+    inverted); an unknown name raises ValueError.
+
+    Resume: every commit records an input signature — the committed
+    counters of the stages it reads (a content fold of ``pages`` for
+    documents), its parameters and its source digest. A stage whose
+    signature is unchanged is ``skipped`` without building its frame;
+    otherwise the catalog's verify path re-commits only the partitions
+    whose content changed (``verified`` when none did, ``written``
+    when some were committed or retracted).
 
     ``analysis_sets``: opt back into the reference's articles_set
     column (bounded/test corpora only — an unbounded array per surface
     at web scale). ``triples_cap``: opt-in per-sentence mention cap for
     entity-stuffed pages (None = exact, matches the sequential oracle;
     set e.g. 32 on open web text and monitor the capped-sentence rate)."""
+    if stages:
+        check_stages(stages)
     gazetteer = gazetteer if gazetteer is not None else GAZETTEER
     nel_lookup = nel_lookup if nel_lookup is not None else NEL_LOOKUP
     cat = CheckpointCatalog(warehouse)
     report: dict[str, dict] = {}
-    want = stages or {
-        "documents",
-        "sentences",
-        "mentions",
-        "linked",
-        "canonical",
-        "triples",
-        "graph",
-        "analysis",
-    }
+    want = stages or DEFAULT_STAGES
+    use_canon = canonicalize and "canonical" in want
 
-    def commit(name: str, df: DataFrame) -> DataFrame:
+    def lineage(stage: str, inputs: list[str], **params) -> str:
+        return _signature(
+            inputs=[[s, cat.state(s)] for s in inputs],
+            params=params,
+            source=_source_digest(_STAGE_SOURCES[stage]),
+        )
+
+    def commit(name: str, build, sig: str, allow_empty: bool = False, peers=()) -> DataFrame:
+        """Commit ``build()`` as stage ``name`` unless it and its
+        ``peers`` (stages written from the same call) all carry ``sig``;
+        returns the committed table."""
         t0 = time.time()
-        snap = cat.write_stage(df, name)
-        rows = sum(c["rows"] for c in snap.get("counters", {}).values())
+        snap: dict = {}
+        if all(cat.is_current(s, sig) for s in (name, *peers)):
+            resume = "skipped"
+        else:
+            snap = cat.write_stage(build(), name, allow_empty=allow_empty, lineage=sig)
+            resume = "written" if snap.get("counters") or snap.get("retracted") else "verified"
         report[name] = {
             "sec": round(time.time() - t0, 3),
-            "rows_committed": rows,
+            "rows_committed": sum(c["rows"] for c in snap.get("counters", {}).values()),
             "batches_committed": len(snap.get("counters", {})),
+            "resume": resume,
         }
-        if not cat.committed_batches(name):
-            # empty stage (e.g. gazetteer matched nothing): no manifest
-            # exists to read back — keep the (empty) frame flowing so
-            # downstream stages run and report zeros instead of a
-            # PATH_NOT_FOUND crash
-            return df
+        # a signed commit always leaves a schema-stamped manifest, so an
+        # empty stage (e.g. gazetteer matched nothing) reads back as a
+        # typed empty frame and downstream stages report zeros
         return cat.read_stage(spark, name)
 
     def need(name: str, for_stage: str) -> DataFrame:
@@ -103,8 +174,13 @@ def run_pipeline(
         return cat.read_stage(spark, name)
 
     docs = sents = mentions = linked = None
+    docs_stage = "documents"  # the documents table sentences are split from
     if "documents" in want:
-        docs = commit("documents", extract_documents(pages, n_batches=n_batches))
+        docs = commit(
+            "documents",
+            lambda: extract_documents(pages, n_batches=n_batches),
+            lineage("documents", [], pages=content_fold(pages), n_batches=n_batches),
+        )
         report["documents"]["audit"] = [
             row.asDict() for row in audit_hashes(docs).orderBy("batch_id").collect()
         ][:8]
@@ -126,12 +202,16 @@ def run_pipeline(
         from .ops.curation import screen_documents
 
         docs = docs if docs is not None else need("documents", "screen")
-        screened = screen_documents(docs).select(
-            *[c for c in docs.columns if c != "text"],
-            F.col("text_scrubbed").alias("text"),
-            "pii_total",
-        )
-        docs = commit("documents_screened", screened)
+
+        def screen():
+            return screen_documents(docs).select(
+                *[c for c in docs.columns if c != "text"],
+                F.col("text_scrubbed").alias("text"),
+                "pii_total",
+            )
+
+        docs = commit("documents_screened", screen, lineage("screen", [docs_stage]))
+        docs_stage = "documents_screened"
         # column-pruned scan of the committed table (pii_total only)
         report["documents_screened"]["pii_docs"] = docs.filter(
             F.col("pii_total") > 0
@@ -153,34 +233,42 @@ def run_pipeline(
         )
 
         docs = docs if docs is not None else need("documents", "dedup")
-        # materialize once: the corpus-wide MinHash aggregate fans out
-        # to ~5 consumers (band self-join sides, bucket counts, both
-        # similarity-filter sides) and Catalyst does not dedupe the
-        # logical subtrees (CLAUDE.md shared-aggregate rule)
-        sigs = minhash_signatures(
-            docs, id_col="doc_id", name_col="text"
-        ).localCheckpoint()
-        # LSH emits CANDIDATES (band collisions); verify with the
-        # MinHash-agreement estimate before clustering — without the
-        # filter, same-vocabulary pages chain into mega-components and
-        # dedup drops distinct documents
-        cand = lsh_candidate_pairs(sigs, id_col="doc_id")
-        pairs = signature_similarity_filter(
-            cand, sigs, id_col="doc_id", min_agreement=0.9
-        ).select("src", "dst")
-        comp = connected_components(pairs)
-        dupes = comp.filter(F.col("component") < F.col("node")).select(
-            F.col("node").alias("doc_id")
-        )
-        deduped = docs.join(dupes, "doc_id", "left_anti")
-        docs = commit("documents_deduped", deduped)
+
+        def dedup():
+            # materialize once: the corpus-wide MinHash aggregate fans
+            # out to ~5 consumers (band self-join sides, bucket counts,
+            # both similarity-filter sides) and Catalyst does not dedupe
+            # the logical subtrees (CLAUDE.md shared-aggregate rule)
+            sigs = minhash_signatures(
+                docs, id_col="doc_id", name_col="text"
+            ).localCheckpoint()
+            # LSH emits CANDIDATES (band collisions); verify with the
+            # MinHash-agreement estimate before clustering — without the
+            # filter, same-vocabulary pages chain into mega-components
+            # and dedup drops distinct documents
+            cand = lsh_candidate_pairs(sigs, id_col="doc_id")
+            pairs = signature_similarity_filter(
+                cand, sigs, id_col="doc_id", min_agreement=0.9
+            ).select("src", "dst")
+            comp = connected_components(pairs)
+            dupes = comp.filter(F.col("component") < F.col("node")).select(
+                F.col("node").alias("doc_id")
+            )
+            return docs.join(dupes, "doc_id", "left_anti")
+
+        docs = commit("documents_deduped", dedup, lineage("dedup", [docs_stage]))
+        docs_stage = "documents_deduped"
 
     if "sentences" in want:
         # the sticky blocks above always set `docs` when a curated
         # table exists (docs_consumer includes "sentences"), so the
         # only fallback is the raw documents stage
         docs = docs if docs is not None else need("documents", "sentences")
-        sents = commit("sentences", split_documents(docs))
+        sents = commit(
+            "sentences",
+            lambda: split_documents(docs),
+            lineage("sentences", [docs_stage]),
+        )
     # NOTE: conflict resolution (J3) applies to MULTI-run merges only
     # (reference: entity_merger2.py post-processes merged class runs);
     # the single dict run keeps nested/overlapping matches exactly like
@@ -188,48 +276,79 @@ def run_pipeline(
     # mention-exact parity with the oracle.
     if "mentions" in want:
         sents = sents if sents is not None else need("sentences", "mentions")
-        m = dict_ner(sents, gazetteer)
-        if resolve_single_run_conflicts:
-            m = resolve_conflicts(m)
-        mentions = commit("mentions", m)
+
+        def ner():
+            m = dict_ner(sents, gazetteer)
+            return resolve_conflicts(m) if resolve_single_run_conflicts else m
+
+        mentions = commit(
+            "mentions",
+            ner,
+            lineage(
+                "mentions", ["sentences"], gazetteer=gazetteer,
+                resolve_conflicts=resolve_single_run_conflicts,
+            ),
+        )
 
     if "linked" in want:
         mentions = mentions if mentions is not None else need("mentions", "linked")
-        lookup = spark.createDataFrame(
-            [{"entity": e, "id": i, "name": n} for e, i, n in nel_lookup]
-        )
-        linked, new_ents = link_entities(mentions, lookup)
-        linked = commit("linked", linked)
+        linked_pair: list = []
+
+        def link():
+            lookup = spark.createDataFrame(
+                [{"entity": e, "id": i, "name": n} for e, i, n in nel_lookup]
+            )
+            linked_pair.extend(link_entities(mentions, lookup))
+            return linked_pair[0]
+
+        # linked and the minted dimension come from one link_entities
+        # call, so they share one signature and skip together
+        sig = lineage("linked", ["mentions"], lookup=nel_lookup)
+        linked = commit("linked", link, sig, peers=("nel_new_entities",))
         # U1: merge the minted dimension back (idempotent upsert analog)
         # allow_empty: once every surface resolves against the lookup,
         # the minted dimension legitimately shrinks to zero rows — the
         # re-run must retract the stale mints, not keep serving them
-        cat.write_stage(
-            new_ents.withColumn("batch_id", F.lit(0)),
+        # (when this builder runs, the linked commit above has run too:
+        # both check the same pair of signatures)
+        commit(
             "nel_new_entities",
+            lambda: linked_pair[1].withColumn("batch_id", F.lit(0)),
+            sig,
             allow_empty=True,
+            peers=("linked",),
         )
     elif {"canonical", "triples", "analysis"} & want:
         linked = need("linked", "canonical/triples/analysis")
 
-    if linked is not None and canonicalize and "canonical" in want:
-        ents = linked.select(
-            F.col("ent_id"), F.col("ent_name").alias("name")
-        ).distinct()
-        canon = canonicalize_entities(ents).withColumn("batch_id", F.lit(0))
-        cat.write_stage(canon, "canonical")
-        canon = cat.read_stage(spark, "canonical").drop("batch_id")
-        linked = linked.join(F.broadcast(canon), "ent_id", "left").withColumn(
-            "canon_id", F.coalesce("canon_id", "ent_id")
-        )
+    if linked is not None and use_canon:
+
+        def canonical():
+            ents = linked.select(
+                F.col("ent_id"), F.col("ent_name").alias("name")
+            ).distinct()
+            return canonicalize_entities(ents).withColumn("batch_id", F.lit(0))
+
+        canon = commit("canonical", canonical, lineage("canonical", ["linked"]))
+        linked = linked.join(
+            F.broadcast(canon.drop("batch_id")), "ent_id", "left"
+        ).withColumn("canon_id", F.coalesce("canon_id", "ent_id"))
     elif linked is not None:
         linked = linked.withColumn("canon_id", F.col("ent_id"))
+    # the stages that read the canon_id-extended linked frame
+    linked_inputs = ["linked", "canonical"] if use_canon else ["linked"]
 
     if "triples" in want:
         sents = sents if sents is not None else need("sentences", "triples")
         commit(
             "triples",
-            cooccurrence_triples(linked, sents, max_mentions_per_sentence=triples_cap),
+            lambda: cooccurrence_triples(
+                linked, sents, max_mentions_per_sentence=triples_cap
+            ),
+            lineage(
+                "triples", [*linked_inputs, "sentences"],
+                triples_cap=triples_cap, canonicalize=use_canon,
+            ),
         )
 
     if "graph" in want and not cat.committed_batches("triples") and "triples" in want:
@@ -244,60 +363,72 @@ def run_pipeline(
         from .ops.graph import pagerank
 
         tri = need("triples", "graph")
+        sig = lineage("graph", ["triples"], n_batches=n_batches)
 
         def bkey(c: str):
             return F.pmod(F.xxhash64(F.col(c)), F.lit(n_batches)).cast("int")
 
-        edges = (
-            tri.groupBy("subj", "pred", "obj")
-            .agg(
-                F.count("*").alias("weight"),
-                F.countDistinct("doc_id").alias("n_docs"),
+        def edges():
+            return (
+                tri.groupBy("subj", "pred", "obj")
+                .agg(
+                    F.count("*").alias("weight"),
+                    F.countDistinct("doc_id").alias("n_docs"),
+                )
+                .withColumn("batch_id", bkey("subj"))
             )
-            .withColumn("batch_id", bkey("subj"))
-        )
-        commit("graph_edges", edges)
-        outd = tri.groupBy(F.col("subj").alias("node")).agg(
-            F.count("*").alias("out_degree")
-        )
-        ind = tri.groupBy(F.col("obj").alias("node")).agg(
-            F.count("*").alias("in_degree")
-        )
-        nodes = (
-            outd.join(ind, "node", "full")
-            .select(
-                "node",
-                F.coalesce("out_degree", F.lit(0)).alias("out_degree"),
-                F.coalesce("in_degree", F.lit(0)).alias("in_degree"),
+
+        def nodes():
+            outd = tri.groupBy(F.col("subj").alias("node")).agg(
+                F.count("*").alias("out_degree")
             )
-            .withColumn("batch_id", bkey("node"))
-        )
-        commit("graph_nodes", nodes)
-        pr = pagerank(
-            tri.select(F.col("subj").alias("src"), F.col("obj").alias("dst")).filter(
-                F.col("src") != F.col("dst")
-            ),
-            iterations=5,
-        )
-        commit("graph_pagerank", pr.withColumn("batch_id", bkey("node")))
+            ind = tri.groupBy(F.col("obj").alias("node")).agg(
+                F.count("*").alias("in_degree")
+            )
+            return (
+                outd.join(ind, "node", "full")
+                .select(
+                    "node",
+                    F.coalesce("out_degree", F.lit(0)).alias("out_degree"),
+                    F.coalesce("in_degree", F.lit(0)).alias("in_degree"),
+                )
+                .withColumn("batch_id", bkey("node"))
+            )
+
+        def ranks():
+            pr = pagerank(
+                tri.select(F.col("subj").alias("src"), F.col("obj").alias("dst")).filter(
+                    F.col("src") != F.col("dst")
+                ),
+                iterations=5,
+            )
+            return pr.withColumn("batch_id", bkey("node"))
+
+        commit("graph_edges", edges, sig)
+        commit("graph_nodes", nodes, sig)
+        commit("graph_pagerank", ranks, sig)
 
     if "analysis" in want:
         mentions = mentions if mentions is not None else need("mentions", "analysis")
+        flags = {"sets": analysis_sets, "approx": analysis_approx}
         # production default with_sets=False: never build per-surface
         # doc_id arrays (unbounded for stopword-like surfaces at web
         # scale); counts stay exact. The contract/test path opts back in
-        # via analysis_sets=True.
-        freq = entity_frequency(
-            mentions, with_sets=analysis_sets, approx_distinct=analysis_approx
-        ).withColumn(
-            "batch_id", F.lit(0)
-        )  # aggregate table: single logical partition
-        cat.write_stage(freq.drop("batch_count"), "entity_frequency")
-        idf = id_frequency(
-            linked, with_sets=analysis_sets, approx_distinct=analysis_approx
-        ).withColumn("batch_id", F.lit(0))
-        cat.write_stage(idf.drop("batch_count"), "id_frequency")
-        report["analysis"] = {"done": True}
+        # via analysis_sets=True. Aggregate tables: one logical partition.
+        commit(
+            "entity_frequency",
+            lambda: entity_frequency(
+                mentions, with_sets=analysis_sets, approx_distinct=analysis_approx
+            ).withColumn("batch_id", F.lit(0)).drop("batch_count"),
+            lineage("analysis", ["mentions"], **flags),
+        )
+        commit(
+            "id_frequency",
+            lambda: id_frequency(
+                linked, with_sets=analysis_sets, approx_distinct=analysis_approx
+            ).withColumn("batch_id", F.lit(0)).drop("batch_count"),
+            lineage("analysis", linked_inputs, **flags),
+        )
 
     # manifest-side total: the commit already counted every partition,
     # so a read-back count job would only re-scan the same parquet
@@ -312,7 +443,7 @@ def run_pipeline(
     return report
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", default=None, help="pages parquet path (default: synthetic)")
     ap.add_argument("--warehouse", required=True)
@@ -326,7 +457,7 @@ def main() -> None:
         "config 'ignore' map, inverted; e.g. --stages mentions,linked "
         "re-runs NER+NEL over checkpointed sentences; 'graph' "
         "materializes graph_nodes/graph_edges/graph_pagerank from "
-        "committed triples)",
+        f"committed triples). Stages: {', '.join(STAGES)}",
     )
     ap.add_argument(
         "--triples-cap",
@@ -363,7 +494,13 @@ def main() -> None:
         "countDistinct (the 10^12-row mode; incompatible with "
         "--analysis-sets)",
     )
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
+    stages = set(args.stages.split(",")) if args.stages else None
+    for flag, stage in ((args.screen, "screen"), (args.dedup_docs, "dedup")):
+        if flag:
+            stages = (stages or set(DEFAULT_STAGES)) | {stage}
+    # fail on a misspelt stage before paying for a Spark session
+    check_stages(stages or ())
 
     from .session import get_spark
 
@@ -373,15 +510,6 @@ def main() -> None:
         if args.input
         else pages_df(spark, n_docs=args.n_docs)
     )
-    stages = set(args.stages.split(",")) if args.stages else None
-    for flag, stage in ((args.screen, "screen"), (args.dedup_docs, "dedup")):
-        if flag:
-            if stages is None:
-                stages = {
-                    "documents", "sentences", "mentions", "linked",
-                    "canonical", "triples", "graph", "analysis",
-                }
-            stages.add(stage)
     report = run_pipeline(
         spark,
         pages,

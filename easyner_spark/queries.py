@@ -90,11 +90,14 @@ _SPREAD_OPEN_COST = 4 * 1024 * 1024  # spark.sql.files.openCostInBytes default
 
 
 def _table_bytes(sf_dir: str, name: str) -> int | None:
-    """On-disk bytes of a testdata table (file or directory); None for
-    non-local paths (cluster: leave the scan alone)."""
+    """On-disk bytes of a testdata table (file or directory); None unless
+    the path is an existing local file or directory — a missing table or
+    a non-local URI (``s3a://…``, cluster storage) leaves the scan alone."""
     import os
 
     path = f"{sf_dir}/{name}.parquet"
+    if not os.path.exists(path):
+        return None
     try:
         if os.path.isfile(path):
             return os.path.getsize(path)

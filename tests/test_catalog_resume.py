@@ -107,3 +107,61 @@ def test_orphan_partitions_invisible_until_committed(spark, docs, tmp_path):
     snap = cat.write_stage(docs, "s")
     assert sorted(int(b) for b in snap["counters"]) == [6, 7]
     assert cat.read_stage(spark, "s").count() == 400
+
+
+def test_lineage_is_stored_with_the_commit_and_cleared_by_unsigned_writes(
+    spark, docs, tmp_path
+):
+    cat = CheckpointCatalog(str(tmp_path / "wh"))
+    assert not cat.is_current("s", "sig1")
+    cat.write_stage(docs, "s", lineage="sig1")
+    assert cat.is_current("s", "sig1") and not cat.is_current("s", "sig2")
+    # a new signature over unchanged data: verified, nothing written,
+    # the signature moves
+    assert cat.write_stage(docs, "s", lineage="sig2") == {}
+    assert cat.is_current("s", "sig2")
+    # a write without a signature clears it
+    assert cat.write_stage(docs, "s") == {}
+    assert not cat.is_current("s", "sig2")
+    assert cat.read_stage(spark, "s").count() == 400
+
+
+def test_lineage_is_dropped_when_data_changes_and_by_compaction(
+    spark, docs, tmp_path, monkeypatch
+):
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    cat = CheckpointCatalog(str(tmp_path / "wh"))
+    cat.write_stage(docs, "s", lineage="a")
+    # a crash while the changed batch is being written leaves no
+    # signature, so the next run verifies instead of skipping
+    changed = docs.withColumn(
+        "text", F.when(F.col("doc_id") == "0", "new").otherwise(F.col("text"))
+    )
+
+    def crash(*a, **kw):
+        raise RuntimeError("killed mid-write")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", crash)
+        with pytest.raises(RuntimeError):
+            cat.write_stage(changed, "s", lineage="b")
+    assert not cat.is_current("s", "a") and not cat.is_current("s", "b")
+    snap = cat.write_stage(changed, "s", lineage="b")
+    assert list(snap["counters"]) == ["0"] and cat.is_current("s", "b")
+    # a retraction is a data change too
+    cat._retract_batches("s", [1], "batch_id")
+    assert not cat.is_current("s", "b")
+    cat.write_stage(changed, "s", lineage="b")
+    assert cat.is_current("s", "b")
+    # compaction re-keys the batches and drops the signature
+    cat.compact_stage(spark, "s", F.pmod(F.xxhash64("doc_id"), F.lit(4)))
+    assert not cat.is_current("s", "b")
+
+
+def test_signed_empty_commit_reads_back_typed_empty(spark, docs, tmp_path):
+    cat = CheckpointCatalog(str(tmp_path / "wh"))
+    assert cat.write_stage(docs.filter(F.lit(False)), "s", lineage="e") == {}
+    assert cat.is_current("s", "e") and cat.state("s") == []
+    back = cat.read_stage(spark, "s")
+    assert back.count() == 0 and set(back.columns) == set(docs.columns)

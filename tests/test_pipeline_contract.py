@@ -396,3 +396,217 @@ def test_dedup_stage_keeps_canonical_members(spark, tmp_path):
     run_pipeline(spark, pages, wh, n_batches=4,
                  stages={"documents", "sentences"})
     assert cat.read_stage(spark, "sentences").select("doc_id").distinct().count() <= n_dd
+
+
+# ---------------------------------------------------------------------------
+# resume by input lineage
+# ---------------------------------------------------------------------------
+
+LINEAGE_TABLES = (
+    "documents", "sentences", "mentions", "linked", "nel_new_entities",
+    "canonical", "triples", "graph_edges", "graph_nodes", "graph_pagerank",
+    "entity_frequency", "id_frequency",
+)
+
+
+def _lineage_run(spark, pages, wh, **kw):
+    from easyner_spark.pipeline import run_pipeline
+
+    return run_pipeline(spark, pages, wh, n_batches=4, **kw)
+
+
+def _states(wh):
+    from easyner_spark.io.catalog import CheckpointCatalog
+
+    cat = CheckpointCatalog(wh)
+    return {s: cat.state(s) for s in LINEAGE_TABLES}
+
+
+@pytest.fixture(scope="module")
+def lineage_base(spark, tmp_path_factory):
+    """One committed warehouse (every default stage) that each case
+    copies and re-runs."""
+    pages = pages_df(spark, n_docs=40)
+    wh = str(tmp_path_factory.mktemp("lineage") / "base")
+    _lineage_run(spark, pages, wh)
+    return wh, pages
+
+
+def _copy(base_wh, tmp_path):
+    import shutil
+
+    wh = str(tmp_path / "resumed")
+    shutil.copytree(base_wh, wh)
+    return wh
+
+
+def _assert_recommits_exactly_the_changed_stages(spark, lineage_base, tmp_path, pages, **kw):
+    """Re-run the base warehouse with a changed input: the result equals
+    a fresh build, and the stages reported ``written`` are exactly those
+    whose committed content differs from the base."""
+    base_wh, _ = lineage_base
+    wh = _copy(base_wh, tmp_path)
+    report = _lineage_run(spark, pages, wh, **kw)
+    _lineage_run(spark, pages, str(tmp_path / "fresh"), **kw)
+    base, got, want = _states(base_wh), _states(wh), _states(str(tmp_path / "fresh"))
+    assert got == want
+    changed = {s for s in LINEAGE_TABLES if want[s] != base[s]}
+    assert changed
+    assert {s for s in LINEAGE_TABLES if report[s]["resume"] == "written"} == changed
+    return report, wh
+
+
+def test_unchanged_rerun_skips_every_stage_without_recomputing(
+    spark, lineage_base, tmp_path, monkeypatch
+):
+    """A second run over the same warehouse builds no stage frame (so no
+    UDF job runs), folds only the input pages (no output stage's
+    counters are recomputed), and reports every stage as skipped."""
+    import easyner_spark.io.catalog as catalog
+    import easyner_spark.ops.graph as graph
+    import easyner_spark.pipeline as pipeline
+
+    base_wh, pages = lineage_base
+    wh = _copy(base_wh, tmp_path)
+
+    def forbidden(*a, **kw):
+        raise AssertionError("a skipped stage built its frame")
+
+    for fn in (
+        "extract_documents", "split_documents", "dict_ner", "link_entities",
+        "canonicalize_entities", "cooccurrence_triples", "entity_frequency",
+        "id_frequency",
+    ):
+        monkeypatch.setattr(pipeline, fn, forbidden)
+    monkeypatch.setattr(graph, "pagerank", forbidden)
+    folded = []
+    orig = catalog._content_counters
+
+    def counters(df, partition_col):
+        folded.append(partition_col)
+        return orig(df, partition_col)
+
+    monkeypatch.setattr(catalog, "_content_counters", counters)
+    report = _lineage_run(spark, pages, wh)
+    assert folded == ["_fold"]  # the pages fold, nothing else
+    stages = {k: v for k, v in report.items() if k != "_totals"}
+    assert set(stages) >= set(LINEAGE_TABLES)
+    assert {v["resume"] for v in stages.values()} == {"skipped"}
+    assert _states(wh) == _states(base_wh)
+    assert report["_totals"]["triples"] == sum(r[1] for r in _states(wh)["triples"])
+
+
+def test_lineage_fallback_in_place_page_text_change(spark, lineage_base, tmp_path):
+    """One page's text changes with the row count unchanged: its batch
+    is re-committed and the change cascades downstream."""
+    _, pages = lineage_base
+    changed = pages.withColumn(
+        "text",
+        F.when(
+            F.col("url").endswith("/000000"),
+            F.concat(F.col("text"), F.lit(" SARS-CoV and coronavirus co-occur.")),
+        ).otherwise(F.col("text")),
+    )
+    report, _ = _assert_recommits_exactly_the_changed_stages(
+        spark, lineage_base, tmp_path, changed
+    )
+    assert report["documents"]["batches_committed"] == 1
+
+
+def test_lineage_fallback_changed_gazetteer(spark, lineage_base, tmp_path):
+    _, pages = lineage_base
+    report, _ = _assert_recommits_exactly_the_changed_stages(
+        spark, lineage_base, tmp_path, pages, gazetteer=GAZETTEER[1:]
+    )
+    assert report["documents"]["resume"] == report["sentences"]["resume"] == "skipped"
+
+
+def test_lineage_fallback_changed_lookup_retracts_mints(spark, lineage_base, tmp_path):
+    """A lookup that resolves every minted surface: the re-run retracts
+    the whole minted dimension (allow_empty) and relinks."""
+    from easyner_spark.io.catalog import CheckpointCatalog
+
+    base_wh, pages = lineage_base
+    mints = CheckpointCatalog(base_wh).read_stage(spark, "nel_new_entities").collect()
+    assert mints
+    lookup = list(NEL_LOOKUP) + [(r["entity"], f"X:{r['entity']}", r["entity"]) for r in mints]
+    report, wh = _assert_recommits_exactly_the_changed_stages(
+        spark, lineage_base, tmp_path, pages, nel_lookup=lookup
+    )
+    assert report["nel_new_entities"]["resume"] == "written"
+    assert CheckpointCatalog(wh).read_stage(spark, "nel_new_entities").count() == 0
+    assert report["mentions"]["resume"] == "skipped"
+
+
+def test_lineage_fallback_changed_source_digest(spark, lineage_base, tmp_path, monkeypatch):
+    """Changed split code: sentences re-verifies, finds its output
+    unchanged, and everything downstream still skips."""
+    import easyner_spark.pipeline as pipeline
+
+    base_wh, pages = lineage_base
+    orig = pipeline._source_digest
+    monkeypatch.setattr(
+        pipeline,
+        "_source_digest",
+        lambda mods: orig(mods) + ("-edited" if "stages/split.py" in mods else ""),
+    )
+    wh = _copy(base_wh, tmp_path)
+    report = _lineage_run(spark, pages, wh)
+    assert {s: report[s]["resume"] for s in LINEAGE_TABLES if report[s]["resume"] != "skipped"} == {
+        "sentences": "verified"
+    }
+    assert _states(wh) == _states(base_wh)
+
+
+def test_lineage_fallback_manifest_without_signature(spark, lineage_base, tmp_path):
+    """Manifests written before signatures existed: every stage takes
+    the verify path once, writes nothing, and is signed for next time."""
+    import glob
+    import json
+
+    base_wh, pages = lineage_base
+    wh = _copy(base_wh, tmp_path)
+    for p in glob.glob(f"{wh}/*._manifest.json"):
+        with open(p) as f:
+            man = json.load(f)
+        man.pop("lineage")
+        with open(p, "w") as f:
+            json.dump(man, f)
+    report = _lineage_run(spark, pages, wh)
+    assert {report[s]["resume"] for s in LINEAGE_TABLES} == {"verified"}
+    assert _states(wh) == _states(base_wh)
+    again = _lineage_run(spark, pages, wh)
+    assert {again[s]["resume"] for s in LINEAGE_TABLES} == {"skipped"}
+
+
+def test_lineage_fallback_compacted_stage(spark, lineage_base, tmp_path):
+    """A compacted stage has a new batch keyspace and no signature: the
+    re-run re-commits it into the writer's keyspace, and its content,
+    equal to the base, lets every downstream stage skip."""
+    from easyner_spark.io.catalog import CheckpointCatalog
+
+    base_wh, pages = lineage_base
+    wh = _copy(base_wh, tmp_path)
+    CheckpointCatalog(wh).compact_stage(
+        spark, "sentences", F.pmod(F.xxhash64("doc_id", "sent_idx"), F.lit(8))
+    )
+    report = _lineage_run(spark, pages, wh)
+    assert {s: report[s]["resume"] for s in LINEAGE_TABLES if report[s]["resume"] != "skipped"} == {
+        "sentences": "written"
+    }
+    assert _states(wh) == _states(base_wh)
+
+
+def test_unknown_stage_name_is_rejected(spark, tmp_path):
+    from easyner_spark.pipeline import main, run_pipeline
+
+    valid = (
+        "documents, screen, dedup, sentences, mentions, linked, canonical, "
+        "triples, graph, analysis"
+    )
+    with pytest.raises(ValueError, match="mention.*valid stages: " + valid):
+        run_pipeline(spark, pages_df(spark, n_docs=5), str(tmp_path / "wh"), stages={"mention"})
+    # the CLI fails before it starts a session or touches the warehouse
+    with pytest.raises(ValueError, match="valid stages: " + valid):
+        main(["--warehouse", str(tmp_path / "cli"), "--stages", "documents,mention"])
+    assert not (tmp_path / "wh").exists() and not (tmp_path / "cli").exists()

@@ -332,3 +332,17 @@ def test_pending_r6_queries_have_no_single_partition_exchange(spark):
         plan = _plan(PENDING_R6[name][0](spark, SF_DIR))
         assert "Exchange SinglePartition" not in plan, name
         assert "WindowExec: No Partition Defined" not in plan, name
+
+
+def test_spread_leaves_missing_and_non_local_tables_alone(spark, tmp_path):
+    """The input-skew guard only spreads a table it can measure on local
+    disk: a missing path or a cluster URI must not get a repartition
+    (it once measured them as 0 bytes and spread every cluster read)."""
+    from easyner_spark.queries import _spread
+
+    df = spark.range(10)
+    spark.range(10).write.parquet(str(tmp_path / "small.parquet"))
+    # control: a small existing local table is spread
+    assert "RoundRobinPartitioning" in _plan(_spread(df, str(tmp_path), "small"))
+    for sf_dir in (str(tmp_path / "nonexistent"), "s3a://bucket/x"):
+        assert "RoundRobinPartitioning" not in _plan(_spread(df, sf_dir, "documents")), sf_dir
